@@ -103,37 +103,21 @@ def append_bloom_index(batch: DataFrame, index_dir: str,
     LSM discipline -- never read-modify-write the whole index on the
     ingest path); ``read_bloom_index`` bit_or-folds segments on read.
     ``compact_after`` rewrites the directory down to one folded segment
-    (staged write + swap, no in-place truncation window) for
-    trickle-append hygiene. Deletions are not supported, as in any
-    plain Bloom filter -- rebuild for that."""
-    bloom_word_table(batch, key, m_bits=m_bits, k=k).coalesce(1) \
-        .write.mode("append").parquet(index_dir)
-    if compact_after:
-        # staged-write + backup-swap, the same protocol as
-        # sources/io.compact_parquet: the live index is never the only
-        # copy -- a failure between the moves restores the original.
-        # (The first version rmtree'd the index before the move with a
-        # finally deleting the staged replacement: one crash window
-        # away from losing the filter entirely.)
-        import os
-        import shutil
-        import uuid
+    (staged write + swap, sources/publish.publish_dir) for
+    trickle-append hygiene. Both steps hold the index's publish lock.
+    Deletions are not supported, as in any plain Bloom filter --
+    rebuild for that."""
+    from ..sources.publish import publish_dir, publish_lock
 
-        spark = batch.sparkSession
-        norm = index_dir.rstrip("/")
-        staging = f"{norm}.__compact_staging_{uuid.uuid4().hex[:8]}"
-        backup = f"{norm}.__compact_backup_{uuid.uuid4().hex[:8]}"
-        read_bloom_index(spark, norm).coalesce(1) \
-            .write.mode("errorifexists").parquet(staging)
-        try:
-            shutil.move(norm, backup)
-            shutil.move(staging, norm)
-        except Exception:
-            if not os.path.isdir(norm) and os.path.isdir(backup):
-                shutil.move(backup, norm)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
+    norm = index_dir.rstrip("/")
+    with publish_lock(norm, owner="bloom_append"):
+        bloom_word_table(batch, key, m_bits=m_bits, k=k).coalesce(1) \
+            .write.mode("append").parquet(norm)
+    if compact_after:
+        publish_dir(norm, lambda staging: read_bloom_index(
+            batch.sparkSession, norm).coalesce(1)
+            .write.mode("errorifexists").parquet(staging),
+            owner="bloom_compact")
 
 
 def read_bloom_index(spark, index_dir: str) -> DataFrame:

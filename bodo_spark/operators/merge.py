@@ -17,67 +17,14 @@ parquet write.
 
 from __future__ import annotations
 
-import contextlib
 from typing import Mapping
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-class ConcurrentWriteError(RuntimeError):
-    """A second writer holds (or took) the table's publish lock.
-
-    The reference gets real commit-conflict detection from Iceberg's
-    optimistic transactions (reference bodo/io/iceberg/merge_into.py:33
-    commits through the catalog, which rejects a stale snapshot); plain
-    parquet directories have no catalog, so the engine enforces the
-    SINGLE-WRITER contract explicitly -- every mutating publish
-    (cow_publish, _publish_partitions, MoR apply/compact, stored-index
-    swaps) takes a lockfile for the duration of the operation and a
-    concurrent mutator raises THIS instead of silently folding past or
-    double-publishing. Readers never take the lock (swaps stay atomic
-    renames)."""
-
-
-@contextlib.contextmanager
-def publish_lock(path: str, *, owner: str = ""):
-    """Single-writer lockfile scoped to one table/store directory:
-    ``O_CREAT|O_EXCL`` on ``<path>.__lock`` is atomic on POSIX (and on
-    the object-store emulations that matter), so exactly one mutator
-    enters; the file records pid/owner for the error message. Crash
-    recovery is explicit by design -- a dead writer leaves the lock and
-    the next mutator raises with its identity, and the operator removes
-    the stale file after confirming the writer is gone (auto-breaking
-    on pid-liveness would be wrong across hosts)."""
-    import json
-    import os
-    import time
-
-    lock = f"{path.rstrip('/')}.__lock"
-    try:
-        fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:
-            with open(lock) as f:
-                holder = f.read().strip()
-        except OSError:
-            holder = "<unreadable>"
-        raise ConcurrentWriteError(
-            f"another writer holds {lock} ({holder}) -- concurrent "
-            "mutations of one table are unsupported (single-writer "
-            "contract); retry after it finishes, or remove the "
-            "lockfile if that writer crashed") from None
-    try:
-        os.write(fd, json.dumps(
-            {"pid": os.getpid(), "owner": owner,
-             "ts": int(time.time())}).encode())
-        os.close(fd)
-        yield
-    finally:
-        try:
-            os.remove(lock)
-        except OSError:
-            pass
+# ConcurrentWriteError and publish_lock stay importable from here
+from ..sources.publish import (  # noqa: F401
+    ConcurrentWriteError, publish_dir, publish_lock, publish_partitions)
 
 
 def merge_into(
@@ -624,29 +571,14 @@ def _escape_part(v) -> str:
 
 def _publish_partitions(merged: DataFrame, path: str, pcol: str,
                         touched: list) -> None:
-    """Stage ONLY the touched partitions and swap their directories in,
-    with the cow_publish restore discipline applied per partition. A
-    touched partition absent from the staged output (every row deleted)
-    is removed. Local-FS path, like cow_publish; on object stores the
-    same staged layout feeds a catalog commit."""
+    """Stage ONLY the touched partitions and swap their directories in
+    (sources/publish.publish_partitions). A touched partition absent
+    from the staged output (every row deleted) is removed."""
     import os
-    import shutil
-    import uuid
 
-    norm = path.rstrip("/")
-    staging = f"{norm}.__cow_parts_{uuid.uuid4().hex[:8]}"
-    with publish_lock(norm, owner="publish_partitions"):
-        _publish_partitions_locked(merged, norm, staging, pcol, touched)
+    expected = {f"{pcol}={_escape_part(v)}" for v in touched}
 
-
-def _publish_partitions_locked(merged: DataFrame, norm: str,
-                               staging: str, pcol: str,
-                               touched: list) -> None:
-    import os
-    import shutil
-    import uuid
-
-    try:
+    def write(staging: str) -> None:
         # one shuffle keyed on the partition col bounds the staged
         # write to ~one file per touched partition (vs tasks x touched
         # tiny files -- the per-file overhead measured on the BM25
@@ -656,91 +588,26 @@ def _publish_partitions_locked(merged: DataFrame, norm: str,
                             F.col(pcol))
          .write.mode("errorifexists").partitionBy(pcol)
          .parquet(staging))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    expected = {f"{pcol}={_escape_part(v)}" for v in touched}
-    staged = {d for d in os.listdir(staging)
-              if d.startswith(f"{pcol}=")}
-    stray = staged - expected
-    if stray:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise ValueError(
-            f"merge produced partitions outside the touched set "
-            f"({sorted(stray)[:5]}): part_col must be immutable under "
-            "the merge -- an update moved a row across partitions")
-    backup = f"{norm}.__cow_partbak_{uuid.uuid4().hex[:8]}"
-    os.makedirs(backup)
-    moved_out, moved_in = [], []
-    try:
-        for name in sorted(expected):
-            old = os.path.join(norm, name)
-            if os.path.isdir(old):
-                shutil.move(old, os.path.join(backup, name))
-                moved_out.append(name)
-            new = os.path.join(staging, name)
-            if os.path.isdir(new):
-                shutil.move(new, os.path.join(norm, name))
-                moved_in.append(name)
-    except Exception:
-        # restore: drop the new dirs that made it in, put the originals
-        # back (same-FS dir moves are atomic renames)
-        for name in moved_in:
-            shutil.rmtree(os.path.join(norm, name), ignore_errors=True)
-        for name in moved_out:
-            bsrc = os.path.join(backup, name)
-            dst = os.path.join(norm, name)
-            if os.path.isdir(bsrc) and not os.path.isdir(dst):
-                shutil.move(bsrc, dst)
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(backup, ignore_errors=True)
-        raise
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
+        stray = {d for d in os.listdir(staging)
+                 if d.startswith(f"{pcol}=")} - expected
+        if stray:
+            raise ValueError(
+                f"merge produced partitions outside the touched set "
+                f"({sorted(stray)[:5]}): part_col must be immutable "
+                "under the merge -- an update moved a row across "
+                "partitions")
+    publish_partitions(path, write, sorted(expected),
+                       owner="publish_partitions")
 
 
 def cow_publish(merged: DataFrame, path: str, *,
                 partition_by: list[str] | None = None) -> None:
     """Publish ``merged`` as the new content of the parquet table at
-    ``path``: durable staging write -> directory swap, with the
-    exception-restore discipline every COW maintainer needs (shared by
-    merge_into_parquet, maintain_rollup_stream and the file-pruned
-    merge). A failed staging write leaves the table untouched and
-    removes the staging dir; a failure between the two moves restores
-    the original from the backup. Serialized per table by publish_lock
-    (two concurrent publishers would each stage from the same snapshot
-    and the loser's changes would silently vanish)."""
-    import shutil
-    import uuid
-
-    norm = path.rstrip("/")
-    staging = f"{norm}.__cow_staging_{uuid.uuid4().hex[:8]}"
-    backup = f"{norm}.__cow_backup_{uuid.uuid4().hex[:8]}"
-    with publish_lock(norm, owner="cow_publish"):
-        w = merged.write.mode("errorifexists")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        try:
-            w.parquet(staging)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        try:
-            shutil.move(norm, backup)
-            shutil.move(staging, norm)
-        except Exception:
-            # Local-FS path only; on object stores callers should point
-            # a catalog/table pointer at `staging` instead of renaming.
-            # shutil can raise shutil.Error (partial cross-device copy)
-            # as well as OSError; restore the original, drop staging.
-            if not _exists_dir(norm) and _exists_dir(backup):
-                shutil.move(backup, norm)
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        shutil.rmtree(backup, ignore_errors=True)
-
-
-def _exists_dir(p: str) -> bool:
-    import os
-
-    return os.path.isdir(p)
+    ``path``: durable staging write -> directory swap under the table's
+    lock (sources/publish.publish_dir), shared by merge_into_parquet,
+    maintain_rollup_stream, MoR compaction and the relayouts. A failed
+    staging write or swap leaves the table as it was."""
+    w = merged.write.mode("errorifexists")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    publish_dir(path, w.parquet, owner="cow_publish")

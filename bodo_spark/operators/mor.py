@@ -354,7 +354,7 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
          .orderBy(F.col(src_seq_col).desc(), F.col(op_col).asc()))
     last = (changes.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1).drop("_rn"))
-    from .merge import publish_lock
+    from ..sources.publish import publish_lock
     with publish_lock(path, owner="mor_apply"):
         meta = _read_meta(path)
         base_cols = _base_columns(path)
@@ -412,12 +412,34 @@ def mor_apply(changes: DataFrame, path: str, *, key_cols: list[str],
         towrite.write.mode("errorifexists").parquet(seg)
         if obs is not None:
             try:
-                _write_touched_sidecar(
-                    seg, int(meta["n_buckets"]),
-                    sorted(int(v) for v in obs.get["b"]))
+                got = _observed(obs, _OBSERVATION_WAIT_S)
+                if got is not None:
+                    _write_touched_sidecar(
+                        seg, int(meta["n_buckets"]),
+                        sorted(int(v) for v in got["b"]))
             except Exception:
                 pass  # optional fast path; compaction falls back
     return seg
+
+
+# How long mor_apply waits, holding the table lock, for the write's
+# observed metrics. They normally arrive within milliseconds of the
+# write; a lost listener event must not hang the writer.
+_OBSERVATION_WAIT_S = 5.0
+
+
+def _observed(obs, timeout_s: float) -> dict | None:
+    """``obs.get`` with a deadline: polls the JVM Observation's future
+    and returns None when it has not completed in ``timeout_s``
+    (``Observation.get`` itself blocks with no deadline)."""
+    import time
+    fut = obs._jo.future()
+    deadline = time.monotonic() + timeout_s
+    while not fut.isCompleted():
+        if time.monotonic() >= deadline:
+            return None
+        time.sleep(0.005)
+    return obs.get
 
 
 def _write_touched_sidecar(seg: str, n_buckets: int,
@@ -435,9 +457,10 @@ def _write_touched_sidecar(seg: str, n_buckets: int,
 def _touched_from_sidecars(segs: list[str],
                            n_buckets: int) -> list[int] | None:
     """Union of the segments' sidecar bucket sets, or None when any
-    segment lacks a sidecar (old producer) or recorded a different
-    bucket count (written before a partition re-layout) -- the caller
-    falls back to the distributed distinct+collect."""
+    segment lacks a sidecar (old producer), recorded a different
+    bucket count (written before a partition re-layout) or holds
+    anything but ``{"n_buckets": int, "touched": [int, ...]}`` -- the
+    caller falls back to the distributed distinct+collect."""
     out: set[int] = set()
     for s in segs:
         try:
@@ -445,9 +468,11 @@ def _touched_from_sidecars(segs: list[str],
                 d = json.load(f)
         except (OSError, ValueError):
             return None
-        if d.get("n_buckets") != n_buckets:
-            return None
-        out.update(int(v) for v in d["touched"])
+        if (not isinstance(d, dict) or d.get("n_buckets") != n_buckets
+                or not isinstance(d.get("touched"), list)
+                or not all(type(v) is int for v in d["touched"])):
+            return None  # wrong shape: not ours to trust
+        out.update(d["touched"])
     return sorted(out)
 
 
@@ -819,25 +844,6 @@ def mor_maintain(spark, path: str, *, key_cols: list[str],
             "base_bytes": base_bytes}
 
 
-def _snapshot_dir(src: str, dst: str) -> None:
-    """Hardlink-copy a parquet directory tree: snapshots cost metadata,
-    not data movement, because parquet files are immutable once written
-    and the publish steps only move/unlink whole files -- exactly the
-    share-unchanged-files economics of an Iceberg/Delta snapshot (old
-    manifests keep referencing old files). Falls back to a real copy
-    where the filesystem refuses links."""
-    for root, _dirs, files in os.walk(src):
-        rel = os.path.relpath(root, src)
-        tdir = dst if rel == "." else os.path.join(dst, rel)
-        os.makedirs(tdir, exist_ok=True)
-        for fn in files:
-            s, t = os.path.join(root, fn), os.path.join(tdir, fn)
-            try:
-                os.link(s, t)
-            except OSError:
-                shutil.copy2(s, t)
-
-
 def mor_compact(spark, path: str, *, key_cols: list[str],
                 seq_col: str = "_cdc_seq",
                 retain_history: bool = False,
@@ -880,8 +886,9 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
     shuffle-window from the on-disk delta mass (the delta log is at
     its LARGEST at compaction time, exactly when an unconditional
     broadcast would be most dangerous)."""
-    from .merge import (ConcurrentWriteError, _bucket_expr,
-                        _publish_partitions, cow_publish, publish_lock)
+    from ..sources.publish import (ConcurrentWriteError, hardlink_copy,
+                                   publish_lock)
+    from .merge import _bucket_expr, _publish_partitions, cow_publish
     with publish_lock(path, owner="mor_compact"):
         meta = _read_meta(path)
         # sweep leftovers from a crashed prior compaction (folded
@@ -902,7 +909,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
             snap = os.path.join(path, "archive",
                                 f"base-{meta['base_seg']:06d}")
             if not os.path.isdir(snap):
-                _snapshot_dir(base_path, snap)
+                hardlink_copy(base_path, snap)
         nb = meta["n_buckets"]
         if relayout:
             # partition evolution (the Iceberg rewrite-with-new-spec
@@ -922,12 +929,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                         f"payload column {bcol!r} collides with the "
                         "bucket bookkeeping column -- rename it "
                         "before re-bucketing")
-                from .merge import _keyed_write_width
-                merged = (cur.withColumn(
-                    bcol, _bucket_expr(list(key_cols), int(nbt)))
-                    .repartition(_keyed_write_width(cur, int(nbt)),
-                                 F.col(bcol)))
-                cow_publish(merged, base_path, partition_by=[bcol])
+                _publish_bucketed(cur, base_path, key_cols, int(nbt), bcol)
             meta["n_buckets"] = None if nbt is None else int(nbt)
         elif nb is not None:
             deltas = _read_deltas(spark, consumed)
@@ -955,10 +957,8 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                 # bucket once.
                 # change mass ~ table: the per-directory publish would
                 # pay a near-full shuffle PLUS per-dir swap overhead --
-                # one bulk bucketed rewrite (repartition by bucket, the
-                # write_bucket_partitioned discipline, under
-                # cow_publish's guarded swap) is strictly better and
-                # keeps the layout
+                # one bulk bucketed rewrite (_publish_bucketed) is
+                # strictly better and keeps the layout
                 base_all = _read_base(spark, base_path,
                                        meta).drop(bcol)
                 payload = [c for c in base_all.columns
@@ -967,12 +967,7 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                     base_all, deltas, payload)
                 cur = _reconcile(base_all, deltas, list(key_cols),
                                  payload, seq_col, pruned=pruned)
-                from .merge import _keyed_write_width
-                merged = (cur.withColumn(
-                    bcol, _bucket_expr(list(key_cols), nb))
-                    .repartition(_keyed_write_width(cur, nb),
-                                 F.col(bcol)))
-                cow_publish(merged, base_path, partition_by=[bcol])
+                _publish_bucketed(cur, base_path, key_cols, nb, bcol)
             else:
                 # direct touched-dir paths: listing O(touched)
                 # instead of O(n_buckets), same rows as the former
@@ -1030,6 +1025,18 @@ def mor_compact(spark, path: str, *, key_cols: list[str],
                 shutil.rmtree(seg, ignore_errors=True)
 
 
+def _publish_bucketed(cur: DataFrame, base_path: str,
+                      key_cols: list[str], n_buckets: int,
+                      bcol: str) -> None:
+    """Bulk rewrite of the base in the write_bucket_partitioned layout,
+    published as one directory swap."""
+    from ..sources.publish import publish_dir
+    from .merge import write_bucket_partitioned
+    publish_dir(base_path, lambda staging: write_bucket_partitioned(
+        cur, staging, list(key_cols), n_buckets, bucket_col=bcol),
+        owner="mor_compact")
+
+
 def mor_expire_snapshots(path: str, *, keep_from: int) -> dict:
     """Retention-horizon maintenance (the Iceberg expire_snapshots
     analogue): drop archived history no longer needed to replay any
@@ -1041,7 +1048,7 @@ def mor_expire_snapshots(path: str, *, keep_from: int) -> dict:
     metadata work plus directory unlinks (hardlinked snapshot files
     free only when their last reference goes). Returns
     ``{expired_bases, expired_segments, kept_from_gen}``."""
-    from .merge import publish_lock
+    from ..sources.publish import publish_lock
     with publish_lock(path, owner="mor_expire_snapshots"):
         return _expire_snapshots_locked(path, keep_from=keep_from)
 

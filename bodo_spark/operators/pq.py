@@ -914,10 +914,10 @@ def pq_stored_append(new_vectors: DataFrame, path: str, *,
     dynamic-partition-append into the touched cell directories --
     O(batch), existing index files never opened. Single-writer: holds
     the store's publish lock so an append cannot interleave with a
-    compaction swap (it would land in the superseded tree and
-    vanish)."""
+    compaction (it would land in the superseded tree and vanish); an
+    overlapping one raises ConcurrentWriteError."""
     from ..rowframe import artifact_df, read_artifact_rows
-    from .merge import publish_lock
+    from ..sources.publish import publish_lock
     from .similarity import _ensure_scan_width, assign_nearest_cell
     spark = new_vectors.sparkSession
     # meta/centroids are bounded store artifacts -- driver-local pyarrow
@@ -960,33 +960,24 @@ def pq_stored_compact(vectors: DataFrame, path: str, *, m: int = 4,
     than the rebuild's routing would silently probe the wrong cells --
     r13 ADVICE). ``retain_history``: keep the superseded store as a
     numbered generation under ``<path>/archive`` for rollback
-    (store_swap.restore_store_generation); returns the generation
-    number (else None)."""
-    import shutil
-    import uuid
-
-    from .store_swap import guarded_store_swap
+    (sources/publish.restore_store_generation); returns the generation
+    number (else None). The rebuild is staged under the store's lock,
+    so an append that overlaps it raises ConcurrentWriteError."""
+    from ..sources.publish import publish_dir
     idx, cbs = pq_compact(vectors, m=m, k=k, n_cells=n_cells,
                           id_col=id_col, vec_col=vec_col,
                           coarse_dim=coarse_dim, trainer=trainer,
                           sample_size=sample_size, iters=iters,
                           seed=seed, centroids=centroids,
                           seed_vectors=seed_vectors)
-    norm = path.rstrip("/")
-    staging = f"{norm}.__pqc_staging_{uuid.uuid4().hex[:8]}"
-    try:
-        pq_store_index(idx, staging, cbs, n_cells=n_cells,
-                       coarse_dim=coarse_dim, id_col=id_col,
-                       vec_col=vec_col, centroids=centroids,
-                       seed_vectors=(seed_vectors
-                                     if seed_vectors is not None
-                                     else (None if centroids is not None
-                                           else vectors)))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
+    return publish_dir(
+        path, lambda staging: pq_store_index(
+            idx, staging, cbs, n_cells=n_cells, coarse_dim=coarse_dim,
+            id_col=id_col, vec_col=vec_col, centroids=centroids,
+            seed_vectors=(seed_vectors if seed_vectors is not None
+                          else (None if centroids is not None
+                                else vectors))),
+        owner="pq_stored_compact", retain_history=retain_history)
 
 
 def pq_stored_topk(spark, path: str, queries: DataFrame, *,

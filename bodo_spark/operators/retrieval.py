@@ -289,24 +289,20 @@ def bm25_stored_append(new_docs: DataFrame, path: str, *,
     the pre-append store or the post-append store, never a torn one;
     a failed append leaves the live store untouched. ``retain_history``
     keeps the superseded store as an archive generation (rollback via
-    store_swap.restore_store_generation); returns its number."""
-    import shutil
-    import uuid
-
+    sources/publish.restore_store_generation); returns its number."""
     from pyspark import StorageLevel
 
-    from .merge import merge_into_partitioned
-    from .store_swap import guarded_store_swap, snapshot_hardlink
+    from ..rowframe import read_artifact_rows, write_artifact_rows
+    from ..sources.publish import hardlink_copy, publish_dir
+    from .merge import _keyed_write_width, merge_into_partitioned
     spark = new_docs.sparkSession
     norm = path.rstrip("/")
-    staging = f"{norm}.__bm25a_staging_{uuid.uuid4().hex[:8]}"
-    from ..rowframe import read_artifact_rows
     nb = int(read_artifact_rows(f"{norm}/meta")[0][0]["n_term_buckets"])
     batch = (bm25_index(new_docs, id_col=id_col, text_col=text_col)
              .persist(StorageLevel.MEMORY_AND_DISK))
-    try:
-        snapshot_hardlink(norm, staging)
-        from .merge import _keyed_write_width
+
+    def write(staging: str) -> None:
+        hardlink_copy(norm, staging)
         tb = _term_bucket(nb)
         (batch.withColumn("tbucket", tb)
          .repartition(_keyed_write_width(batch, nb), F.col("tbucket"))
@@ -322,25 +318,22 @@ def bm25_stored_append(new_docs: DataFrame, path: str, *,
         b = bcs.collect()[0]
         # additive one-row update of a bounded artifact: driver-local
         # read + write (no local_df evaluation, no write job, no
-        # cow_publish swap -- the staging dir is private until the
-        # whole-store guarded_store_swap below publishes it)
-        from ..rowframe import write_artifact_rows
+        # cow_publish swap -- the staging dir is private until
+        # publish_dir swaps the whole store in)
         cur, cschema = read_artifact_rows(f"{staging}/corpus_stats")
         write_artifact_rows(
             f"{staging}/corpus_stats",
             [(int(cur[0]["n_docs"]) + int(b["n_docs"]),
               int(cur[0]["sum_dl"]) + int(b["sum_dl"]))],
             cschema, mode="overwrite")
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
+    try:
+        return publish_dir(norm, write, owner="bm25_stored_append",
+                           retain_history=retain_history)
     finally:
         try:
             batch.unpersist()
         except Exception:
             pass
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
 
 
 def bm25_stored_topk(spark, path: str, queries: DataFrame, *,

@@ -379,10 +379,10 @@ def sq_stored_append(new_vectors: DataFrame, path: str, *,
     opened. Out-of-range values clamp to the stored bounds by the
     sq_encode contract -- watch sq_clamp_fraction and compact.
     Single-writer: holds the store's publish lock so an append cannot
-    interleave with a compaction swap (it would land in the superseded
-    tree and vanish)."""
+    interleave with a compaction (it would land in the superseded
+    tree and vanish); an overlapping one raises ConcurrentWriteError."""
     from ..rowframe import artifact_df, read_artifact_rows
-    from .merge import publish_lock
+    from ..sources.publish import publish_lock
     from .similarity import _ensure_scan_width, assign_nearest_cell
     spark = new_vectors.sparkSession
     # meta/centroids are bounded store artifacts -- driver-local pyarrow
@@ -425,30 +425,22 @@ def sq_stored_compact(vectors: DataFrame, path: str, *,
     ``retain_history``: keep the superseded store as a numbered
     generation under ``<path>/archive`` (hardlink snapshot -- metadata
     cost) so serving can roll back a bad compaction via
-    store_swap.restore_store_generation; returns the generation
-    number (else None)."""
-    import shutil
-    import uuid
-
-    from .store_swap import guarded_store_swap
+    sources/publish.restore_store_generation; returns the generation
+    number (else None). The rebuild is staged under the store's lock,
+    so an append that overlaps it raises ConcurrentWriteError."""
+    from ..sources.publish import publish_dir
     idx, los, his = sq_compact(vectors, n_cells=n_cells,
                                centroids=centroids, id_col=id_col,
                                vec_col=vec_col, coarse_dim=coarse_dim,
                                seed_vectors=seed_vectors, bits=bits)
-    norm = path.rstrip("/")
-    staging = f"{norm}.__sqc_staging_{uuid.uuid4().hex[:8]}"
-    try:
-        sq_store_index(idx, staging, los, his, n_cells=n_cells,
-                       centroids=centroids, coarse_dim=coarse_dim,
-                       bits=bits, id_col=id_col, vec_col=vec_col,
-                       seed_vectors=(seed_vectors
-                                     if seed_vectors is not None
-                                     else vectors))
-    except Exception:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return guarded_store_swap(norm, staging,
-                              retain_history=retain_history)
+    return publish_dir(
+        path, lambda staging: sq_store_index(
+            idx, staging, los, his, n_cells=n_cells,
+            centroids=centroids, coarse_dim=coarse_dim, bits=bits,
+            id_col=id_col, vec_col=vec_col,
+            seed_vectors=(seed_vectors if seed_vectors is not None
+                          else vectors)),
+        owner="sq_stored_compact", retain_history=retain_history)
 
 
 def sq_stored_topk(spark, path: str, queries: DataFrame, *,

@@ -1726,12 +1726,12 @@ def ann_sq_stored_compact(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         import glob as g
-        for dd in g.glob(f"{stage}.__sqc_*"):
+        for dd in g.glob(f"{stage}.__cow_*"):
             shutil.rmtree(dd, ignore_errors=True)
 
 
 def ann_sq_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
-    """Stored-index generation ROLLBACK (operators/store_swap.py --
+    """Stored-index generation ROLLBACK (sources/publish.py --
     the expire_snapshots/rollback discipline applied to the serving
     tier): batch 1 builds + stores the index under ITS bounds, batch 2
     appends, then a compaction retrains over the full corpus with
@@ -1746,8 +1746,8 @@ def ann_sq_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
     import uuid
 
     from ..operators import sq as Q
-    from ..operators.store_swap import (restore_store_generation,
-                                        store_generations)
+    from ..sources.publish import (restore_store_generation,
+                                   store_generations)
     emb = tbl(spark, sf, "embeddings")
     b1 = emb.where(F.col("vec_id") % 3 != 0)
     b2 = emb.where(F.col("vec_id") % 3 == 0)
@@ -1922,12 +1922,12 @@ def ann_pq_stored_compact(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         import glob as g
-        for dd in g.glob(f"{stage}.__pqc_*"):
+        for dd in g.glob(f"{stage}.__cow_*"):
             shutil.rmtree(dd, ignore_errors=True)
 
 
 def ann_pq_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
-    """Stored IVF-PQ generation ROLLBACK (operators/store_swap.py --
+    """Stored IVF-PQ generation ROLLBACK (sources/publish.py --
     ann_sq_stored_rollback's twin for the codebook family, completing
     rollback parity across the stored index families): the two-batch
     store is built the ann_pq_stored_append way (full-corpus pinned
@@ -1944,8 +1944,8 @@ def ann_pq_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
     import uuid
 
     from ..operators import pq as PQ
-    from ..operators.store_swap import (restore_store_generation,
-                                        store_generations)
+    from ..sources.publish import (restore_store_generation,
+                                   store_generations)
     emb = tbl(spark, sf, "embeddings")
     cbs = PQ.lowest_id_pq_codebooks(emb, m=4, k=16)
     b1 = emb.where(F.col("vec_id") % 2 == 0)

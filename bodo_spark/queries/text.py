@@ -695,13 +695,12 @@ def text_bm25_stored_append(spark: SparkSession, sf: str) -> DataFrame:
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         import glob as g
-        for dd in g.glob(f"{stage}/term_stats.__cow_*") + \
-                g.glob(f"{stage}/corpus_stats.__cow_*"):
+        for dd in g.glob(f"{stage}.__cow_*"):
             shutil.rmtree(dd, ignore_errors=True)
 
 
 def text_bm25_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
-    """Stored BM25 generation ROLLBACK (operators/store_swap.py --
+    """Stored BM25 generation ROLLBACK (sources/publish.py --
     completing rollback parity across ALL THREE stored index families
     after ann_sq_stored_rollback / ann_pq_stored_rollback): the
     two-batch store is built the text_bm25_stored_append way (now
@@ -718,8 +717,8 @@ def text_bm25_stored_rollback(spark: SparkSession, sf: str) -> DataFrame:
     import uuid
 
     from ..operators import retrieval as R
-    from ..operators.store_swap import (restore_store_generation,
-                                        store_generations)
+    from ..sources.publish import (restore_store_generation,
+                                   store_generations)
     d = tbl(spark, sf, "documents")
     b1 = d.where(F.col("doc_id") % 2 == 0)
     b2 = d.where(F.col("doc_id") % 2 == 1)

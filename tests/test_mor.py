@@ -683,3 +683,70 @@ def test_mor_lookup_prunes_bucket_partitions(spark, tmp_path):
         m = re.search(r"PartitionFilters: \[([^\]]*)\]", ln)
         assert m and "mbucket" in m.group(1) \
             and " IN " in m.group(1), ln
+
+
+def _bucketed(spark, tmp_path):
+    path = str(tmp_path / "t")
+    M.mor_init(spark.createDataFrame(
+        [(i, f"s{i}", 0) for i in range(16)],
+        "k long, seg string, _cdc_seq long"), path, key_cols=["k"],
+        n_buckets=8)
+    return path
+
+
+_ONE_CHANGE = [(1, "v1", "U", 1), (2, None, "D", 1)]
+_AFTER_ONE = [(0, "s0", 0), (1, "v1", 1)] + [(i, f"s{i}", 0)
+                                             for i in range(3, 16)]
+
+
+@pytest.mark.parametrize("sidecar", [
+    [0, 1],                          # not a dict
+    {"n_buckets": 8},                # no touched list
+    {"n_buckets": 8, "touched": ["x"]},  # entries are not ints
+])
+def test_mor_malformed_sidecar_falls_back(spark, tmp_path, sidecar):
+    """A ``_touched.json`` that parses but has the wrong shape is
+    ignored: compaction takes the collect path and folds correctly."""
+    import json
+    path = _bucketed(spark, tmp_path)
+    seg = M.mor_apply(spark.createDataFrame(
+        _ONE_CHANGE, "k long, seg string, op string, seq long"),
+        path, key_cols=["k"])
+    with open(os.path.join(seg, "_touched.json"), "w") as f:
+        json.dump(sidecar, f)
+    assert M._touched_from_sidecars([seg], 8) is None
+    M.mor_compact(spark, path, key_cols=["k"])
+    assert M.mor_delta_stats(spark, path)["n_segments"] == 0
+    assert _state(spark, path) == _AFTER_ONE
+
+
+def test_mor_apply_observation_wait_is_bounded(spark, tmp_path,
+                                               monkeypatch):
+    """An observed-metrics event that never arrives must not hang
+    mor_apply under the table lock: the wait gives up, the sidecar is
+    skipped, the lock is released, and compaction falls back to the
+    collect."""
+    import pyspark.sql
+    real = pyspark.sql.Observation
+
+    class NeverCompletes(real):
+        def _on(self, df, *exprs):
+            out = super()._on(df, *exprs)
+            # a second JVM Observation attached to nothing: its
+            # future never completes
+            self._jo = getattr(self._jvm,
+                               "org.apache.spark.sql.Observation")()
+            return out
+
+    path = _bucketed(spark, tmp_path)
+    monkeypatch.setattr(pyspark.sql, "Observation", NeverCompletes)
+    monkeypatch.setattr(M, "_OBSERVATION_WAIT_S", 0.5)
+    seg = M.mor_apply(spark.createDataFrame(
+        _ONE_CHANGE, "k long, seg string, op string, seq long"),
+        path, key_cols=["k"])
+    assert not os.path.exists(os.path.join(seg, "_touched.json"))
+    assert not os.path.exists(f"{path}.__lock")
+    monkeypatch.undo()
+    M.mor_compact(spark, path, key_cols=["k"])
+    assert M.mor_delta_stats(spark, path)["n_segments"] == 0
+    assert _state(spark, path) == _AFTER_ONE

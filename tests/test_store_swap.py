@@ -1,4 +1,4 @@
-"""Stored-index generation retention (operators/store_swap.py): the
+"""Stored-index generation retention (sources/publish.py): the
 whole-store swap keeps numbered snapshots, rollback restores a prior
 generation (and is itself undoable), expiry bounds the archive, and the
 BM25 stored append is all-or-nothing under the swap."""
@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bodo_spark.operators import sq as Q
-from bodo_spark.operators import store_swap as SS
+from bodo_spark.sources import publish as SS
 from bodo_spark.queries._util import tbl
 
 from .conftest import SF_DIR
@@ -90,7 +90,7 @@ def test_bm25_stored_append_is_atomic(spark, tmp_path):
         R.bm25_stored_append(bad, path)
     assert snap(path) == before
     assert not [d for d in os.listdir(os.path.dirname(path))
-                if "__bm25a_staging" in d]
+                if "__cow_" in d]
     # a good append still serves one-shot-identically and can retain
     more = spark.createDataFrame([(4, "delta epsilon alpha")],
                                  "doc_id long, text string")
